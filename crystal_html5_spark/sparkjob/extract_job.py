@@ -8,7 +8,17 @@ a single vectorized Arrow UDF):
       -> latest-capture dedup           -- window on url, desc(warc_ts)
       -> salted repartition             -- host # (xxhash64(url) % salt)
       -> mapInArrow(extract_batches)    -- tokenizer+tree+extract per batch
-      -> sink (parquet) + per-partition metrics table
+      -> localCheckpoint                -- write_with_lineage: ONE evaluation
+      -> sink (parquet) + per-partition metrics table, both off the checkpoint
+
+The sink and the metrics table read the same materialized batch, so every
+page is parsed once and the metrics describe exactly the rows extracted
+(before the sink's idempotence anti-join drops keys already written).  A
+local checkpoint, not ``persist()``: a resumed batch reads its done keys
+from the sink's path, so the sink's write would make Spark re-cache a
+persisted batch, re-running it against the keys just written.  The checkpoint cuts lineage, so a lost executor fails the sink
+job rather than recomputing; the idempotent sink plus ``read_done_keys``
+make rerunning the batch safe (details in write_with_lineage).
 
 Scale notes (100 TB / 1000 executors):
 - The only shuffles are the dedup window and the explicit salted
@@ -223,12 +233,41 @@ def top_error_pages(extracted: DataFrame, k: int = 20) -> DataFrame:
 def write_with_lineage(extracted: DataFrame, out_dir: str) -> None:
     """Idempotent sink: extracted rows + metrics side table, through the
     io seam (Iceberg MERGE INTO keyed on (url, warc_ts) when the runtime
-    is present; parquet with a key anti-join otherwise — see io.py)."""
+    is present; parquet with a key anti-join otherwise — see io.py).
+
+    The batch is evaluated ONCE: ``localCheckpoint(eager=True)`` runs the
+    scan, dedup, resume anti-join, shuffle and parse in one job, and both
+    writes read its blocks.  So:
+
+    - the sink keeps its own fresh done-key anti-join (idempotence under
+      re-delivery), applied to the checkpointed rows;
+    - the metrics describe the extracted batch BEFORE that anti-join, and
+      ``partition_id`` still names the extraction partition (a local
+      checkpoint keeps the partitioning); ``sum_parse_ms`` is the sum of
+      the very ``parse_ms`` values the sink wrote.
+
+    Not ``persist()``: a resumed batch's cached plan reads the done keys
+    from ``{out_dir}/extracted``, the sink's write to that path makes
+    Spark re-cache by path, and the recomputed cache anti-joins against
+    the keys just written — so the resumed batch's metrics come out
+    empty, and the pre-UDF stages run again anyway.
+
+    Lineage trade: the checkpoint cuts the lineage, so losing an
+    executor that holds its blocks fails the sink job instead of
+    recomputing the lost partitions.  Rerunning the whole batch is safe:
+    the sink is idempotent and ``read_done_keys`` resumes from what was
+    written.  The blocks are released on the way out, success or not
+    (``DataFrame.unpersist()`` does not reach a local checkpoint's
+    blocks; unpersisting the checkpointed RDD does)."""
     from crystal_html5_spark.sparkjob import io as tableio
 
     spark = extracted.sparkSession
-    tableio.write_extracted(spark, extracted, out_dir)
-    tableio.write_metrics(partition_metrics(extracted), out_dir)
+    batch = extracted.localCheckpoint(eager=True)
+    try:
+        tableio.write_extracted(spark, batch, out_dir)
+        tableio.write_metrics(partition_metrics(batch), out_dir)
+    finally:
+        batch._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 def read_done_keys(spark, out_dir: str) -> DataFrame | None:

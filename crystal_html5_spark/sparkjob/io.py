@@ -87,15 +87,23 @@ def spread_small_scan(spark, df: DataFrame, source: str) -> DataFrame:
     every core.  The shuffle moves only the pruned columns of a
     sub-split-size table; at real scale the scan already has >=
     parallelism splits and the frame is returned unchanged (no exchange
-    in the plan)."""
+    in the plan).
+
+    The answer is memoized per (session, source, parallelism), which
+    assumes the source is immutable for the session's lifetime: a source
+    rewritten in place with a different file layout keeps its first
+    answer.  A probe that raises (a transient planning or listing
+    failure) leaves the frame unspread for that call and is not
+    memoized, so the next call probes again."""
     p = spark.sparkContext.defaultParallelism
     key = (spark, source, p)
-    if key not in _SPREAD_MEMO:
+    spread = _SPREAD_MEMO.get(key)
+    if spread is None:
         try:
-            _SPREAD_MEMO[key] = df.rdd.getNumPartitions() < p
+            spread = _SPREAD_MEMO[key] = df.rdd.getNumPartitions() < p
         except Exception:  # noqa: BLE001 — planning failure: no spread
-            _SPREAD_MEMO[key] = False
-    return df.repartition(p) if _SPREAD_MEMO[key] else df
+            spread = False
+    return df.repartition(p) if spread else df
 
 
 def read_pages(spark, source: str) -> DataFrame:

@@ -3693,28 +3693,17 @@ def _pages_fixed_spread(spark) -> DataFrame:
                         f"pages_fixed_{_FIXED_PAGES_N}")
 
 
-def _latest_pages(spark) -> DataFrame:
-    """Latest capture per url of the fixed fixture — ONE Spark-side
-    definition of the dedup rule (matches freeze_expected.py's
-    latest_captures; the fixture has no (url, ts) ties)."""
-    from pyspark.sql import Window
-
-    pages = _pages_fixed(spark).select("url", "warc_ts", "html")
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (pages.withColumn("rn", F.row_number().over(w))
-            .where("rn = 1").select("url", "html"))
-
-
 def _latest_pages_sorted(spark) -> DataFrame:
     """Latest-capture input in run_extract's ONE-shuffle shape for
     heavyweight mapInArrow consumers: salted repartition (the key is a
     pure function of url, so every capture of a url lands in one
     partition) + partition-local sort on (url, warc_ts desc).  The
-    consumer keeps the FIRST row of each consecutive url run — same
-    rows as _latest_pages, but the parse work is spread over every
-    core and the window's second exchange disappears (the r5 plan ran
-    the selector/block parses in ONE task: the window's 7 MB output
-    coalesced to a single AQE partition)."""
+    consumer keeps the FIRST row of each consecutive url run — the
+    latest capture per url (freeze_expected.py's latest_captures; the
+    fixture has no (url, ts) ties), with the parse work spread over
+    every core and no window exchange (a window dedup's 7 MB output
+    coalesced to a single AQE partition and ran the selector/block
+    parses in ONE task)."""
     from .extract_job import salted_repartition
 
     pages = _pages_fixed(spark).select("url", "warc_ts", "html")

@@ -92,6 +92,38 @@ def test_catalog_branch_needs_iceberg(monkeypatch):
     assert rec.calls == [("parquet", "cat.db.pages")]
 
 
+def test_spread_small_scan_retries_after_failed_probe(monkeypatch):
+    """A partition probe that raises once leaves that call unspread and
+    is not memoized: the next call probes again, and its answer is the
+    one kept."""
+    from types import SimpleNamespace
+
+    probes = []
+
+    class _Rdd:
+        def getNumPartitions(self):
+            probes.append(1)
+            if len(probes) == 1:
+                raise RuntimeError("transient listing failure")
+            return 1
+
+    class _Frame:
+        rdd = _Rdd()
+
+        def repartition(self, n):
+            return ("spread", n)
+
+    class _Session:
+        sparkContext = SimpleNamespace(defaultParallelism=4)
+
+    monkeypatch.setattr(tableio, "_SPREAD_MEMO", {})
+    spark, frame = _Session(), _Frame()
+    assert tableio.spread_small_scan(spark, frame, "pages") is frame
+    assert tableio.spread_small_scan(spark, frame, "pages") == ("spread", 4)
+    assert tableio.spread_small_scan(spark, frame, "pages") == ("spread", 4)
+    assert len(probes) == 2
+
+
 def test_iceberg_absent_in_this_container(spark):
     # The container has no iceberg-spark-runtime; the seam must say so
     # (and therefore route writes down the parquet branch).
@@ -169,6 +201,108 @@ def test_resume_path_uses_done_keys(spark, tmp_path):
     full = run_extract(spark, pages, num_partitions=4)
     assert total.count() == full.count()
     assert total.select("url").distinct().count() == total.count()
+
+
+_SUMS = ("n_docs", "sum_html_bytes", "sum_text_bytes", "sum_parse_ms",
+         "n_errors")
+
+
+def _newest(df):
+    """Rows of the most recent write: every row one write stamps shares
+    its batch_ts."""
+    from pyspark.sql import functions as F
+
+    return df.where(F.col("batch_ts") == df.agg(F.max("batch_ts")).first()[0])
+
+
+def _metrics_batch(spark, dest):
+    """The newest metrics batch, one sorted tuple per partition."""
+    rows = _newest(spark.read.parquet(f"{dest}/metrics")).collect()
+    return sorted(tuple(r[c] for c in _SUMS) for r in rows)
+
+
+@pytest.fixture
+def broadcast_joins(spark):
+    """Broadcast the sink's done-key anti-join, so each extraction
+    partition writes its own file (a shuffled join would regroup the
+    rows).  Set here because session options set by other test modules
+    (autoBroadcastJoinThreshold=-1) carry over to this session."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(10 << 20))
+    yield
+    spark.conf.set(key, old)
+
+
+def _sink_batch(spark, dest):
+    """The same sums over the rows the newest write put in the sink, one
+    tuple per written file.  Each extraction partition writes one file,
+    in partition order, so the float sums add in the same order as the
+    metrics' and compare exactly."""
+    from pyspark.sql import functions as F
+
+    rows = _newest(spark.read.parquet(f"{dest}/extracted"))
+    per_file = rows.groupBy(F.input_file_name()).agg(
+        F.count("*"), F.sum("html_bytes"), F.sum(F.length("text")),
+        F.sum("parse_ms"),
+        F.sum(F.when(F.col("err") == "", 0).otherwise(1)),
+    ).drop("input_file_name()")
+    return sorted(tuple(r) for r in per_file.collect())
+
+
+def test_metrics_reconcile_with_rows_written_fresh(spark, tmp_path):
+    """The metrics batch describes exactly the rows the same call wrote:
+    same counts, bytes and errors, and the very parse_ms values (one
+    evaluation of the batch feeds both writes)."""
+    dest = str(tmp_path / "out")
+    write_with_lineage(
+        run_extract(spark, pages_df(spark, 60), num_partitions=4), dest)
+    metrics = _metrics_batch(spark, dest)
+    assert metrics and metrics == _sink_batch(spark, dest)
+
+
+def test_metrics_reconcile_on_resume(spark, tmp_path, broadcast_joins):
+    """A resumed batch (done keys anti-joined upstream of the parse) has
+    a non-empty metrics batch that matches the rows it added."""
+    dest = str(tmp_path / "out")
+    pages = pages_df(spark, 80)
+    write_with_lineage(
+        run_extract(spark, pages.limit(40), num_partitions=4), dest)
+    done = tableio.read_done_keys(spark, dest)
+    write_with_lineage(
+        run_extract(spark, pages, num_partitions=4, done_keys=done), dest)
+    metrics = _metrics_batch(spark, dest)
+    assert metrics, "resumed batch wrote rows but no metrics"
+    assert metrics == _sink_batch(spark, dest)
+
+
+def test_metrics_of_redelivered_batch(spark, tmp_path):
+    """Re-delivering the same batch writes no rows, and its metrics still
+    describe the batch as extracted (before the sink's anti-join)."""
+    dest = str(tmp_path / "out")
+    batch = run_extract(spark, pages_df(spark, 60), num_partitions=4)
+    batch = batch.localCheckpoint(eager=True)  # the same rows both times
+    try:
+        write_with_lineage(batch, dest)
+        first = _metrics_batch(spark, dest)
+        n = spark.read.parquet(f"{dest}/extracted").count()
+        assert first == _sink_batch(spark, dest)
+        write_with_lineage(batch, dest)
+        assert spark.read.parquet(f"{dest}/extracted").count() == n
+        assert _metrics_batch(spark, dest) == first
+    finally:
+        batch._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+
+def test_write_with_lineage_releases_its_blocks(spark, tmp_path):
+    """The batch materialized for the two writes is freed after each
+    call: nothing stays in the block manager."""
+    dest = str(tmp_path / "out")
+    pages = pages_df(spark, 60)
+    for n in (30, 30, 60):  # fresh, re-delivered, superset
+        write_with_lineage(
+            run_extract(spark, pages.limit(n), num_partitions=4), dest)
+    assert not list(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
 
 def test_compact_latest_keeps_only_latest_capture(spark, tmp_path):

@@ -630,3 +630,26 @@ def test_cdxj_keys_with_whitespace_stay_parseable():
         assert ts14 == "20240102030405"
     # ordinary keys unchanged by the sanitizer
     assert any(k == "example,ok)/fine" for k, _, _ in entries)
+
+
+def test_cdxj_keys_without_whitespace_pass_through():
+    """Keys without whitespace stay byte-identical, clean %-escaped surt
+    keys included; only a key containing whitespace has its whitespace
+    and its '%' percent-encoded."""
+    import datetime as dt
+
+    from crystal_html5_spark.sparkjob.warcio import parse_cdxj, write_cdxj
+
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5)
+    index = [
+        ("https://ok.example/caf%C3%A9?q=a%20b", ts, 0, 10),
+        ("urn:pct:50%", ts, 10, 5),
+        ("https://ok.example/50% off", ts, 15, 5),
+    ]
+    data = write_cdxj(index, htmls=[b"x"] * len(index))
+    keys = {blob["url"]: key for key, _ts, blob in parse_cdxj(data)}
+    assert keys == {
+        "https://ok.example/caf%C3%A9?q=a%20b": "example,ok)/caf%C3%A9",
+        "urn:pct:50%": "urn:pct:50%",
+        "https://ok.example/50% off": "example,ok)/50%25%20off",
+    }
