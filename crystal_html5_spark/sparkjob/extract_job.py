@@ -7,7 +7,7 @@ a single vectorized Arrow UDF):
       -> [anti-join done-keys]          -- checkpoint/resume
       -> latest-capture dedup           -- window on url, desc(warc_ts)
       -> salted repartition             -- host # (xxhash64(url) % salt)
-      -> mapInArrow(extract_batches)    -- tokenizer+tree+extract per batch
+      -> mapInArrow(doc_batches)        -- tokenizer+tree+extract per batch
       -> localCheckpoint                -- write_with_lineage: ONE evaluation
       -> sink (parquet) + per-partition metrics table, both off the checkpoint
 
@@ -16,9 +16,10 @@ page is parsed once and the metrics describe exactly the rows extracted
 (before the sink's idempotence anti-join drops keys already written).  A
 local checkpoint, not ``persist()``: a resumed batch reads its done keys
 from the sink's path, so the sink's write would make Spark re-cache a
-persisted batch, re-running it against the keys just written.  The checkpoint cuts lineage, so a lost executor fails the sink
-job rather than recomputing; the idempotent sink plus ``read_done_keys``
-make rerunning the batch safe (details in write_with_lineage).
+persisted batch, re-running it against the keys just written.  The
+checkpoint cuts lineage, so a lost executor fails the sink job rather than
+recomputing; the idempotent sink plus ``read_done_keys`` make rerunning the
+batch safe (details in write_with_lineage).
 
 Scale notes (100 TB / 1000 executors):
 - The only shuffles are the dedup window and the explicit salted
@@ -28,12 +29,13 @@ Scale notes (100 TB / 1000 executors):
   into Python over Arrow).
 - A single oversize or malformed page becomes an error row, never a task
   failure; `max_doc_bytes` bounds per-document memory.
-- Output batches re-batch by accumulated byte size so one 50 MB page amid
-  4 KB pages cannot blow up a single Arrow batch.
+- Output batches re-batch by accumulated byte size (doc_batches) so one
+  50 MB page amid 4 KB pages cannot blow up a single Arrow batch.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -45,87 +47,104 @@ RESULT_SCHEMA_DDL = (
 DEFAULT_MAX_DOC_BYTES = 64 * 1024 * 1024
 _TARGET_OUT_BATCH_BYTES = 32 * 1024 * 1024
 
+_PASS_THROUGH = ("url", "warc_ts")
+_ARROW_TYPES = {
+    "string": pa.string(), "binary": pa.binary(), "int": pa.int32(),
+    "long": pa.int64(), "bigint": pa.int64(), "double": pa.float64(),
+}
+
+
+def doc_batches(per_doc, ddl: str, *, fallback=(), latest_only=False):
+    """The one per-document Arrow operator: build the function handed to
+    ``frame.mapInArrow(doc_batches(per_doc, ddl), ddl)`` over a frame with
+    ``url`` and ``html`` columns (plus ``warc_ts`` when ``ddl`` has it).
+
+    ``per_doc(html)`` gets each page's bytes (``None`` becomes ``b""``)
+    and returns a list of output tuples, one value per ``ddl`` column
+    other than the pass-through ``url``/``warc_ts``: one tuple per page,
+    or zero or more for multi-row sites.  The operator owns the rest:
+
+    - error rows: if ``per_doc`` raises, the constant ``fallback`` rows
+      are emitted for that page and the task goes on;
+    - ``latest_only``: the input is sorted by (url, warc_ts desc) within
+      the partition and only the first row of each url run (the latest
+      capture) is kept, tracked across input-batch boundaries;
+    - pass-through: ``url`` (and ``warc_ts``) are ``take``-n from the
+      input columns, repeated once per output row;
+    - re-batching: an output batch is cut at the end of each input batch
+      and whenever its input plus variable-width output bytes reach
+      ``_TARGET_OUT_BATCH_BYTES``, so one 50 MB page amid 4 KB pages
+      cannot blow up a single Arrow batch."""
+    fields = []
+    for col in ddl.split(","):
+        name, typ = col.split()
+        fields.append((name, None if name in _PASS_THROUGH
+                       else _ARROW_TYPES[typ]))
+    fallback = list(fallback)
+
+    def out_batch(batch, idx, rows):
+        idx = pa.array(idx, pa.int32())
+        made = iter(zip(*rows))
+        return pa.RecordBatch.from_arrays(
+            [batch.column(name).take(idx) if typ is None
+             else pa.array(next(made), typ) for name, typ in fields],
+            names=[name for name, _ in fields],
+        )
+
+    def doc_batch_map(iterator):
+        last_url = None
+        for batch in iterator:
+            urls = batch.column("url").to_pylist() if latest_only else None
+            idx, rows, acc_bytes = [], [], 0
+            for i, h in enumerate(batch.column("html").to_pylist()):
+                if latest_only:
+                    if urls[i] == last_url:
+                        continue  # older capture of the same url
+                    last_url = urls[i]
+                h = h or b""
+                try:
+                    out = per_doc(h)
+                except Exception:  # noqa: BLE001 — error-row policy
+                    out = fallback
+                acc_bytes += len(h)
+                for row in out:
+                    idx.append(i)
+                    rows.append(row)
+                    acc_bytes += sum(len(v) for v in row
+                                     if isinstance(v, (bytes, str)))
+                if acc_bytes >= _TARGET_OUT_BATCH_BYTES and rows:
+                    yield out_batch(batch, idx, rows)
+                    idx, rows, acc_bytes = [], [], 0
+            if rows:
+                yield out_batch(batch, idx, rows)
+
+    return doc_batch_map
+
 
 def make_extract_fn(max_doc_bytes: int = DEFAULT_MAX_DOC_BYTES,
                     dedup_consecutive: bool = False):
-    """Build the mapInArrow function (Iterator[RecordBatch] ->
-    Iterator[RecordBatch]); one Python worker per partition, zero per-row
-    Python objects crossing the wire.
+    """The production extraction function for ``mapInArrow`` with
+    ``RESULT_SCHEMA_DDL``: ``extract_document`` per page through
+    ``doc_batches``.
 
     With ``dedup_consecutive`` the input is expected sorted by
     (url, warc_ts desc) within the partition; the first row of each url
     group (the latest capture) wins and the rest are skipped — this is the
     single-shuffle dedup path (see run_extract)."""
+    from crystal_html5_spark.html5x import extract
 
-    def extract_batches(iterator):
-        import pyarrow as pa
+    def extract_row(html):
+        # Looked up on the module per call, so a wrapper installed in the
+        # worker (perfbench's tracer) is the one that runs.
+        r = extract.extract_document(html, max_doc_bytes=max_doc_bytes)
+        return [(r["text"], r["main_text"], r["n_nodes"], len(html),
+                 r["err"], r["parse_ms"])]
 
-        from crystal_html5_spark.html5x.extract import extract_document
-
-        last_url = None
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            tss = batch.column("warc_ts")
-            htmls = batch.column("html").to_pylist()
-
-            keep_idx: list[int] = []
-            acc_bytes = 0
-            texts: list[bytes] = []
-            mains: list[str] = []
-            n_nodes: list[int] = []
-            html_bytes: list[int] = []
-            errs: list[str] = []
-            parse_ms: list[float] = []
-
-            def flush():
-                if not keep_idx:
-                    return None
-                return pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([urls[i] for i in keep_idx], pa.string()),
-                        tss.take(pa.array(keep_idx, pa.int32())),
-                        pa.array(texts, pa.binary()),
-                        pa.array(mains, pa.string()),
-                        pa.array(n_nodes, pa.int32()),
-                        pa.array(html_bytes, pa.int64()),
-                        pa.array(errs, pa.string()),
-                        pa.array(parse_ms, pa.float64()),
-                    ],
-                    names=[
-                        "url", "warc_ts", "text", "main_text", "n_nodes",
-                        "html_bytes", "err", "parse_ms",
-                    ],
-                )
-
-            for i, h in enumerate(htmls):
-                u = urls[i]
-                if dedup_consecutive:
-                    if u == last_url:
-                        continue  # older capture of the same url
-                    last_url = u
-                h = h or b""
-                r = extract_document(h, max_doc_bytes=max_doc_bytes)
-                keep_idx.append(i)
-                texts.append(r["text"])
-                mains.append(r["main_text"])
-                n_nodes.append(r["n_nodes"])
-                html_bytes.append(len(h))
-                errs.append(r["err"])
-                parse_ms.append(r["parse_ms"])
-                acc_bytes += len(h) + len(r["text"])
-                if acc_bytes >= _TARGET_OUT_BATCH_BYTES:
-                    out = flush()
-                    if out is not None:
-                        yield out
-                    keep_idx = []
-                    acc_bytes = 0
-                    texts, mains, n_nodes = [], [], []
-                    html_bytes, errs, parse_ms = [], [], []
-            out = flush()
-            if out is not None:
-                yield out
-
-    return extract_batches
+    return doc_batches(
+        extract_row, RESULT_SCHEMA_DDL,
+        fallback=[(b"", "", 0, 0, "extract_error", 0.0)],
+        latest_only=dedup_consecutive,
+    )
 
 
 def dedup_latest_capture(pages: DataFrame) -> DataFrame:

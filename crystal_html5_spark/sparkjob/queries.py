@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import io as tableio
-from .extract_job import run_extract
+from .extract_job import doc_batches, run_extract, salted_repartition
 from .multimodal import (
     MEDIA_META_ORACLE as _MEDIA_META_ORACLE,
     MEDIA_THUMBS_ORACLE as _MEDIA_THUMBS_ORACLE,
@@ -896,36 +896,24 @@ from ..html5x.extract import SELECTOR_POLICY_WITH_H2 as _SELECTOR_POLICY  # noqa
 
 
 def _extract_selector_pages(spark, sf_dir: str) -> DataFrame:
-    latest = _latest_pages_sorted(spark)
+    import hashlib
 
-    def extract(iterator):
-        import hashlib
+    from ..html5x.extract import main_text_selector
+    from ..html5x.parser import parse
 
-        import pyarrow as pa
+    def sel_digest(text):
+        return (hashlib.sha256(
+            text.encode("utf-8", "surrogateescape")).hexdigest(), len(text))
 
-        from crystal_html5_spark.html5x.extract import main_text_selector
-        from crystal_html5_spark.html5x.parser import parse
+    def extract(html):
+        return [sel_digest(main_text_selector(parse(html),
+                                              _SELECTOR_POLICY))]
 
-        urls, sha, ln = [], [], []
-        for u, h in _consecutive_latest(iterator):
-            try:
-                mt = main_text_selector(parse(h or b""),
-                                        _SELECTOR_POLICY)
-            except Exception:  # noqa: BLE001
-                mt = ""
-            urls.append(u)
-            sha.append(hashlib.sha256(
-                mt.encode("utf-8", "surrogateescape")).hexdigest())
-            ln.append(len(mt))
-        if urls:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(sha, pa.string()),
-                 pa.array(ln, pa.int64())],
-                names=["url", "sel_sha256", "sel_len"],
-            )
-
-    return latest.mapInArrow(
-        extract, "url string, sel_sha256 string, sel_len long"
+    ddl = "url string, sel_sha256 string, sel_len long"
+    return _latest_pages_sorted(spark).mapInArrow(
+        doc_batches(extract, ddl, fallback=[sel_digest("")],
+                    latest_only=True),
+        ddl,
     ).orderBy("url")
 
 
@@ -1745,37 +1733,19 @@ def _extract_anchor_frame(spark) -> DataFrame:
     """(url, href, anchor_text) rows from every fixture page via the
     CSS engine — shared by the anchor rollup and the link-graph
     PageRank."""
-    pages = _pages_fixed_spread(spark).select("url", "html")
+    from ..html5x.css import compile_selector
+    from ..html5x.extract import _utf8_safe
+    from ..html5x.parser import parse
 
-    def anchors(iterator):
-        import pyarrow as pa
+    sel = compile_selector("a[href]")
 
-        from crystal_html5_spark.html5x.css import compile_selector
-        from crystal_html5_spark.html5x.extract import _utf8_safe
-        from crystal_html5_spark.html5x.parser import parse
+    def anchors(html):
+        return [(_utf8_safe(m["href"]), _utf8_safe(m.inner_text()))
+                for m in sel.select(parse(html))]
 
-        sel = compile_selector("a[href]")
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            u, h, a = [], [], []
-            for url, html in zip(urls, htmls):
-                try:
-                    matches = sel.select(parse(html or b""))
-                except Exception:  # noqa: BLE001
-                    matches = []
-                for m in matches:
-                    u.append(url)
-                    h.append(_utf8_safe(m["href"]))
-                    a.append(_utf8_safe(m.inner_text()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(u, pa.string()), pa.array(h, pa.string()),
-                 pa.array(a, pa.string())],
-                names=["url", "href", "anchor_text"],
-            )
-
-    return pages.mapInArrow(
-        anchors, "url string, href string, anchor_text string")
+    ddl = "url string, href string, anchor_text string"
+    return _pages_fixed_spread(spark).select("url", "html").mapInArrow(
+        doc_batches(anchors, ddl), ddl)
 
 
 def _extract_anchor_texts(spark, sf_dir: str) -> DataFrame:
@@ -2797,39 +2767,16 @@ FROM classified GROUP BY url ORDER BY url
 
 
 def _extract_content_blocks(spark, sf_dir: str) -> DataFrame:
-    latest = _latest_pages_sorted(spark)
+    from ..html5x.extract import block_features
+    from ..html5x.parser import parse
 
-    def feats(iterator):
-        import pyarrow as pa
+    def feats(html):
+        return block_features(parse(html))
 
-        from crystal_html5_spark.html5x.extract import block_features
-        from crystal_html5_spark.html5x.parser import parse
-
-        u, bno, tag, tl, ll = [], [], [], [], []
-        for url, h in _consecutive_latest(iterator):
-            try:
-                rows = block_features(parse(h or b""))
-            except Exception:  # noqa: BLE001 — bad page -> no blocks
-                rows = []
-            for b, t, a, c in rows:
-                u.append(url)
-                bno.append(b)
-                tag.append(t)
-                tl.append(a)
-                ll.append(c)
-        if u:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(u, pa.string()), pa.array(bno, pa.int32()),
-                 pa.array(tag, pa.string()), pa.array(tl, pa.int64()),
-                 pa.array(ll, pa.int64())],
-                names=["url", "block_no", "tag", "text_len", "link_len"],
-            )
-
-    bdf = latest.mapInArrow(
-        feats,
-        "url string, block_no int, tag string,"
-        " text_len long, link_len long",
-    )
+    ddl = ("url string, block_no int, tag string,"
+           " text_len long, link_len long")
+    bdf = _latest_pages_sorted(spark).mapInArrow(
+        doc_batches(feats, ddl, latest_only=True), ddl)
     bdf.createOrReplaceTempView("extract_block_feats")
     return spark.sql(_CONTENT_BLOCKS_CLASSIFY.format(
         src="SELECT * FROM extract_block_feats"))
@@ -3698,35 +3645,16 @@ def _latest_pages_sorted(spark) -> DataFrame:
     heavyweight mapInArrow consumers: salted repartition (the key is a
     pure function of url, so every capture of a url lands in one
     partition) + partition-local sort on (url, warc_ts desc).  The
-    consumer keeps the FIRST row of each consecutive url run — the
-    latest capture per url (freeze_expected.py's latest_captures; the
-    fixture has no (url, ts) ties), with the parse work spread over
-    every core and no window exchange (a window dedup's 7 MB output
-    coalesced to a single AQE partition and ran the selector/block
-    parses in ONE task)."""
-    from .extract_job import salted_repartition
-
+    consumer, ``doc_batches(..., latest_only=True)``, keeps the FIRST
+    row of each consecutive url run — the latest capture per url
+    (freeze_expected.py's latest_captures; the fixture has no (url, ts)
+    ties), with the parse work spread over every core and no window
+    exchange (a window dedup's 7 MB output coalesced to a single AQE
+    partition and ran the selector/block parses in ONE task)."""
     pages = _pages_fixed(spark).select("url", "warc_ts", "html")
     n = spark.sparkContext.defaultParallelism
     return salted_repartition(pages, n).sortWithinPartitions(
         "url", F.desc("warc_ts"))
-
-
-def _consecutive_latest(batches):
-    """Generator helper for the _latest_pages_sorted consumers: yields
-    (url, html) rows keeping the first row of each consecutive url run
-    (tracked across Arrow batch boundaries within the task)."""
-    last_url = None
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        for u, h in zip(urls, htmls):
-            if u == last_url:
-                continue
-            last_url = u
-            yield u, h
-
-
 
 
 def _extract_pages(spark, sf_dir: str) -> DataFrame:
@@ -3900,121 +3828,62 @@ def _warc_gz_extract_pages(spark, sf_dir: str) -> DataFrame:
 def _page_links(spark, sf_dir: str) -> DataFrame:
     """CSS-driven link extraction per page (a[href]); oracle-checked
     against the frozen in-process-engine output."""
-    pages = _pages_fixed_spread(spark).select("url", "html")
+    from ..html5x.css import compile_selector
+    from ..html5x.parser import parse
 
-    def links(iterator):
-        import pyarrow as pa
+    sel = compile_selector("a[href]")
 
-        from crystal_html5_spark.html5x.css import compile_selector
-        from crystal_html5_spark.html5x.parser import parse
+    def links(html):
+        hrefs = [m["href"] for m in sel.select(parse(html))]
+        return [(len(hrefs), hrefs[0] if hrefs else None)]
 
-        sel = compile_selector("a[href]")
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            n_links = []
-            first_href = []
-            for h in htmls:
-                try:
-                    doc = parse(h or b"")
-                    matched = sel.select(doc)
-                    hrefs = [m["href"] for m in matched]
-                except Exception:  # noqa: BLE001
-                    hrefs = []
-                n_links.append(len(hrefs))
-                first_href.append(hrefs[0] if hrefs else None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls), pa.array(n_links, pa.int32()),
-                 pa.array(first_href, pa.string())],
-                names=["url", "n_links", "first_href"],
-            )
-
-    return pages.mapInArrow(
-        links, "url string, n_links int, first_href string"
+    ddl = "url string, n_links int, first_href string"
+    return _pages_fixed_spread(spark).select("url", "html").mapInArrow(
+        doc_batches(links, ddl, fallback=[(0, None)]), ddl
     ).orderBy("url")
 
 
 def _page_titles(spark, sf_dir: str) -> DataFrame:
     """XPath-driven title extraction per page (//title); oracle-checked
     against the frozen in-process-engine output."""
-    pages = _pages_fixed_spread(spark).select("url", "html")
+    from ..html5x.parser import parse
+    from ..html5x.xpath import xpath
 
-    def titles(iterator):
-        import pyarrow as pa
+    def titles(html):
+        node = xpath(parse(html), "//title")
+        if node is None:
+            return [(None,)]
+        return [(node.inner_text().encode("utf-8", "replace")
+                 .decode("utf-8"),)]
 
-        from crystal_html5_spark.html5x.parser import parse
-        from crystal_html5_spark.html5x.xpath import xpath
-
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            out = []
-            for h in htmls:
-                try:
-                    node = xpath(parse(h or b""), "//title")
-                    t = node.inner_text() if node is not None else None
-                    if t is not None:
-                        t = t.encode("utf-8", "replace").decode("utf-8")
-                except Exception:  # noqa: BLE001
-                    t = None
-                out.append(t)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls), pa.array(out, pa.string())],
-                names=["url", "title"],
-            )
-
-    return pages.mapInArrow(titles, "url string, title string").orderBy("url")
+    ddl = "url string, title string"
+    return _pages_fixed_spread(spark).select("url", "html").mapInArrow(
+        doc_batches(titles, ddl, fallback=[(None,)]), ddl
+    ).orderBy("url")
 
 
 def xpath_stats_over(pages: DataFrame) -> DataFrame:
     """XPath stats UDF over any (url, html) frame — shared by the
     driver-contract query (fixed fixture, frozen oracle) and the bench's
-    sf-scaled throughput entry."""
+    sf-scaled throughput entry.  A malformed page gives nulls and -1."""
+    from ..html5x.parser import parse
+    from ..html5x.xpath import xpath_float, xpath_string
 
-    def stats(iterator):
-        import pyarrow as pa
+    def stats(html):
+        doc = parse(html)
+        return [(
+            xpath_string(doc, "normalize-space(//title)"),
+            int(xpath_float(
+                doc, "count(//article//a[contains(@href, '/ref/')])")),
+            xpath_string(doc, "string(//nav//a[1]/@href)"),
+            int(xpath_float(
+                doc, "count(//p[string-length(normalize-space()) > 0])")),
+        )]
 
-        from crystal_html5_spark.html5x.parser import parse
-        from crystal_html5_spark.html5x.xpath import (
-            xpath_float,
-            xpath_string,
-        )
-
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            titles, n_ref, first_nav, n_paras = [], [], [], []
-            for h in htmls:
-                try:
-                    doc = parse(h or b"")
-                    titles.append(
-                        xpath_string(doc, "normalize-space(//title)"))
-                    n_ref.append(int(xpath_float(
-                        doc,
-                        "count(//article//a[contains(@href, '/ref/')])")))
-                    first_nav.append(
-                        xpath_string(doc, "string(//nav//a[1]/@href)"))
-                    n_paras.append(int(xpath_float(
-                        doc,
-                        "count(//p[string-length(normalize-space()) > 0])")))
-                except Exception:  # noqa: BLE001 — malformed page -> nulls
-                    titles.append(None)
-                    n_ref.append(-1)
-                    first_nav.append(None)
-                    n_paras.append(-1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls), pa.array(titles, pa.string()),
-                 pa.array(n_ref, pa.int64()),
-                 pa.array(first_nav, pa.string()),
-                 pa.array(n_paras, pa.int64())],
-                names=["url", "title_norm", "n_ref_links",
-                       "first_nav_href", "n_nonempty_paras"],
-            )
-
+    ddl = ("url string, title_norm string, n_ref_links bigint,"
+           " first_nav_href string, n_nonempty_paras bigint")
     return pages.mapInArrow(
-        stats,
-        "url string, title_norm string, n_ref_links bigint,"
-        " first_nav_href string, n_nonempty_paras bigint",
+        doc_batches(stats, ddl, fallback=[(None, -1, None, -1)]), ddl
     ).orderBy("url")
 
 

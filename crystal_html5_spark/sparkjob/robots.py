@@ -85,7 +85,9 @@ def _pattern_matches(pattern: str, path: str) -> bool:
     executor mid-crawl.  Greedy leftmost placement of each inter-'*'
     segment is exact for this pattern language: earlier placement only
     ever leaves more room for later segments, and the end-anchored tail
-    is checked at the end position directly."""
+    is checked at the end position directly.  '*' matches any octet,
+    newline included: this deliberately differs from the old non-DOTALL
+    regex, whose '.*' never crossed a newline."""
     anchored = pattern.endswith("$")
     if anchored:
         pattern = pattern[:-1]

@@ -188,6 +188,35 @@ def test_linear_matcher_equals_regex_reference():
             (pat, path)
 
 
+def test_star_matches_newline_like_dotall_reference():
+    """'*' matches any octet, newline included (a re.DOTALL reference,
+    with '\\Z' as the end anchor since '$' also matches before a final
+    newline); the replaced non-DOTALL regex never crossed a newline."""
+    import re
+
+    from crystal_html5_spark.sparkjob.robots import _pattern_matches
+
+    def dotall_ref(pattern, path):
+        anchored = pattern.endswith("$")
+        if anchored:
+            pattern = pattern[:-1]
+        rx = ".*".join(re.escape(p) for p in pattern.split("*"))
+        if anchored:
+            rx += r"\Z"
+        return re.match(rx, path, re.DOTALL) is not None
+
+    hand = [
+        ("/a*b", "/a\nb", True), ("/a*b$", "/a\n\nb", True),
+        ("/a*$", "/a\n", True), ("/a$", "/a\n", False),
+        ("/a\n*c", "/a\nbc", True), ("/*\n$", "/x\n", True),
+        ("/a*b*c", "/a\nc\nb", False), ("*\n*", "/p", False),
+        ("/a", "/a\n", True), ("/a\n", "/a", False),
+    ]
+    for pat, path, want in hand:
+        assert dotall_ref(pat, path) == want, (pat, path)
+        assert _pattern_matches(pat, path) == want, (pat, path)
+
+
 def test_linear_matcher_hostile_pattern_fast():
     """The catastrophic-backtracking case the regex form was vulnerable
     to: many wildcards, long non-matching path — must answer quickly."""
