@@ -8,11 +8,21 @@ selector.cr (tree-walk evaluation with document-order dedup).
 The reference pipelines lexer->compiler through a fiber + channel
 (compile.cr:2-7); here the lexer is an ordinary generator — same token
 stream, no concurrency.
+
+Evaluation keeps the reference's match semantics, not its shape.  Each
+compound's matchers are fused into one predicate, and
+``SelectorSequence.select`` is one iterative pre-order walk that calls it
+once per node, where the reference recursed per child and matched every
+node twice.  The output list is the same, order and cross-group duplicates
+included (the argument is in ``SelectorSequence``'s docstring), and
+selection no longer recurses, so a deeply nested page cannot raise
+``RecursionError``.
 """
 
 from __future__ import annotations
 
 import re
+from functools import lru_cache
 from typing import Callable, Optional
 
 from .node import DOCUMENT_NODE, ELEMENT_NODE, TEXT_NODE, Node
@@ -593,29 +603,81 @@ class ScopeMatcher(Matcher):
 
 
 class SelectorSequence(Matcher):
-    """selector.cr:66-102."""
+    """selector.cr:66-102: one compound selector (``p.lead:first-child``).
+
+    ``__init__`` fuses the matcher list into one predicate, bound as
+    ``self.matches``: a leading ``TypeSelector`` is tested inline (one
+    attribute compare rejects most nodes), then the remaining matchers in
+    order; a single matcher is called through its own bound ``matches``.
+    The list is read once, so ``matchers`` must not change afterwards.
+
+    ``select`` is one iterative pre-order walk of ``n``'s subtree that
+    calls the predicate once per node, so selection does not recurse and
+    document depth does not matter.  It returns exactly the list the
+    reference's recursion (selector.cr:74-101) returns: the recursion
+    appends ``n`` only if it matches and is not already in ``selected``,
+    then appends every matching descendant without dedup, in document
+    order.  Its dedup also ran at each recursive call's top node, but a
+    matching child had just been appended there, so below ``n`` it never
+    fired.  Duplicates across selector groups (``p, p``) therefore still
+    repeat, by design.
+    """
 
     def __init__(self, matchers: list[Matcher] | None = None):
         self.matchers = matchers if matchers is not None else []
+        self.matches = _fuse(self.matchers)
 
-    def matches(self, n: Node) -> bool:
-        for m in self.matchers:
-            if not m.matches(n):
+    def select(self, n: Node, selected: list[Node]) -> list[Node]:
+        matches = self.matches
+        if matches(n) and not _node_in(selected, n):
+            selected.append(n)
+        append = selected.append
+        c = n.first_child
+        while c is not None:
+            if matches(c):
+                append(c)
+            nxt = c.first_child
+            if nxt is None:
+                # Climb to the nearest ancestor below n with a next sibling.
+                nxt = c.next_sibling
+                while nxt is None:
+                    c = c.parent
+                    if c is n:
+                        return selected
+                    nxt = c.next_sibling
+            c = nxt
+        return selected
+
+
+def _fuse(matchers: list[Matcher]) -> Callable[[Node], bool]:
+    """One predicate testing every matcher of a compound, in list order."""
+    if matchers and type(matchers[0]) is TypeSelector:
+        ele = matchers[0].ele
+        rest = tuple(m.matches for m in matchers[1:])
+        # The tag compare comes first: it rejects nearly every node alone.
+        if not rest:
+            return lambda n: n.data == ele and n.type == ELEMENT_NODE
+
+        def typed(n: Node) -> bool:
+            if n.data != ele or n.type != ELEMENT_NODE:
+                return False
+            for m in rest:
+                if not m(n):
+                    return False
+            return True
+
+        return typed
+    if len(matchers) == 1:
+        return matchers[0].matches
+    preds = tuple(m.matches for m in matchers)
+
+    def all_of(n: Node) -> bool:
+        for m in preds:
+            if not m(n):
                 return False
         return True
 
-    def select(self, n: Node, selected: list[Node]) -> list[Node]:
-        if self.matches(n) and not _node_in(selected, n):
-            selected.append(n)
-        c = n.first_child
-        while c is not None:
-            # NOTE: no dedup on the child append (selector.cr:78) — matches
-            # accumulated across selector groups may repeat, by design.
-            if self.matches(c):
-                selected.append(c)
-            selected = self.select(c, selected)
-            c = c.next_sibling
-        return selected
+    return all_of
 
 
 class CombinatorSelector:
@@ -1018,10 +1080,40 @@ class Compiler:
 
 
 def compile_selector(expr: str, scope_node: Node | None = None) -> Selector:
-    """compile.cr:2-7 (lexer runs as a plain generator, not a fiber)."""
+    """compile.cr:2-7 (lexer runs as a plain generator, not a fiber).
+
+    Without ``scope_node`` the compiled ``Selector`` is memoized per
+    expression string (512 entries, as ``xpath._compile``), so a policy
+    compiled per document (``extract.main_text_selector``) is built once
+    per process.  Every caller shares the returned object: evaluation only
+    reads it, and no caller in the program mutates a compiled selector's
+    groups, combinators or matcher lists; keep it that way.  With
+    ``scope_node`` (``css()`` binds ``:scope`` to its node) each call
+    compiles afresh.
+
+    A selector holds at most three whitespace-separated compounds:
+    ``div article p`` compiles, ``div article p a`` (or ``div > article p
+    a``) raises ``SyntaxError_``.  The cause is the ``combination`` flag in
+    ``Compiler.compile_selector``, which mirrors compile.cr:65-91: the
+    trailing ``skip_space`` swallows the blank before the next compound,
+    which then arrives as a bare IDENT that only a set flag accepts, and
+    accepting it clears the flag, so the next IDENT ends the selector and
+    ``compile_selectors_group`` rejects it.  Kept as the reference behaves.
+    """
+    if scope_node is None:
+        return _compile_unscoped(expr)
+    return _compile(expr, scope_node)
+
+
+def _compile(expr: str, scope_node: Node | None) -> Selector:
     lexer = Lexer(expr)
     compiler = Compiler(lexer.tokens(), scope_node)
     return Selector(compiler.compile_selectors_group())
+
+
+@lru_cache(maxsize=512)
+def _compile_unscoped(expr: str) -> Selector:
+    return _compile(expr, None)
 
 
 def css(node: Node, expression: str) -> list[Node]:

@@ -129,3 +129,38 @@ def test_parse_nth():
     for bad in (" 80n+100 ", "80n+100 ", " 80n+100", "foobar"):
         with pytest.raises(C.SyntaxError_):
             C._parse_nth(bad)
+
+
+def test_deep_nesting_selects_without_recursion():
+    from crystal_html5_spark.html5x import extract
+
+    depth = 5000
+    doc = parse("<div>" * depth + "<p>x</p>" + "</div>" * depth)
+    for expr in ("p", "body p"):
+        found = C.compile_selector(expr).select(doc)
+        assert [n.data for n in found] == ["p"], expr
+    assert extract.main_text_selector(doc) == "x"
+    # "div p" is left out on purpose: by reference semantics the
+    # descendant combinator walks from every one of the 5,000 divs and
+    # returns 4,999 duplicates of the p, in time quadratic in depth.
+
+
+def test_scope_free_compile_is_memoized():
+    assert C.compile_selector("div > p.lead") is C.compile_selector("div > p.lead")
+    doc = parse('<div id="a"><p>1</p></div><div id="b"><p>2</p><p>3</p></div>')
+    a, b = C.css(doc, "div")
+    assert [n.first_child.data for n in C.css(a, ":scope p")] == ["1"]
+    assert [n.first_child.data for n in C.css(b, ":scope p")] == ["2", "3"]
+
+
+def test_at_most_three_compounds():
+    doc = parse("<div><article><p><a>x</a></p></article></div>")
+    assert [n.data for n in C.compile_selector("div article p").select(doc)] \
+        == ["p"]
+    # A fourth whitespace-separated compound is rejected, as in the
+    # reference: Compiler.compile_selector's ``combination`` flag (after
+    # compile.cr:65-91) admits one bare-IDENT compound after a combinator
+    # and clears itself, so the next IDENT ends the selector early.
+    for expr in ("div article p a", "div > article p a"):
+        with pytest.raises(C.SyntaxError_):
+            C.compile_selector(expr)
