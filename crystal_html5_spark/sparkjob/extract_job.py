@@ -4,12 +4,18 @@ Plan shape (all relational steps are stock Catalyst operators; the parser is
 a single vectorized Arrow UDF):
 
     scan(url, warc_ts, html)            -- column-pruned parquet/Iceberg scan
-      -> [anti-join done-keys]          -- checkpoint/resume
-      -> latest-capture dedup           -- window on url, desc(warc_ts)
       -> salted repartition             -- host # (xxhash64(url) % salt)
-      -> mapInArrow(doc_batches)        -- tokenizer+tree+extract per batch
+      -> sortWithinPartitions           -- url, desc(warc_ts)
+      -> mapInArrow(doc_batches)        -- latest capture per url (skip
+                                           consecutive urls) + tokenizer,
+                                           tree and extract per batch
       -> localCheckpoint                -- write_with_lineage: ONE evaluation
       -> sink (parquet) + per-partition metrics table, both off the checkpoint
+
+The resume path (``done_keys``) dedups with a window instead, so the
+done-key anti-join can run on exact keys after it: scan -> latest-capture
+window on url, desc(warc_ts) -> anti-join done keys -> salted repartition
+-> mapInArrow(doc_batches), which then skips nothing.
 
 The sink and the metrics table read the same materialized batch, so every
 page is parsed once and the metrics describe exactly the rows extracted
@@ -22,9 +28,12 @@ recomputing; the idempotent sink plus ``read_done_keys`` make rerunning the
 batch safe (details in write_with_lineage).
 
 Scale notes (100 TB / 1000 executors):
-- The only shuffles are the dedup window and the explicit salted
-  repartition; both key on url/host so domain skew is defeated by the salt
-  and AQE's skew-join handling covers the residue.
+- The fresh path has one shuffle, the salted repartition: its key is a
+  pure function of url, so every capture of a url lands in one partition
+  and the partition-local sort finishes the dedup.  The resume path adds
+  the dedup window's exchange and, unless AQE broadcasts the done keys,
+  the anti-join's.  The salted key spreads a dominant host over many
+  partitions and AQE's skew-join handling covers the residue.
 - Filters/column pruning reach the scan (only url, warc_ts, html cross
   into Python over Arrow).
 - A single oversize or malformed page becomes an error row, never a task
@@ -47,46 +56,61 @@ RESULT_SCHEMA_DDL = (
 DEFAULT_MAX_DOC_BYTES = 64 * 1024 * 1024
 _TARGET_OUT_BATCH_BYTES = 32 * 1024 * 1024
 
-_PASS_THROUGH = ("url", "warc_ts")
 _ARROW_TYPES = {
     "string": pa.string(), "binary": pa.binary(), "int": pa.int32(),
     "long": pa.int64(), "bigint": pa.int64(), "double": pa.float64(),
+    "timestamp": pa.timestamp("us"),
 }
 
 
-def doc_batches(per_doc, ddl: str, *, fallback=(), latest_only=False):
-    """The one per-document Arrow operator: build the function handed to
-    ``frame.mapInArrow(doc_batches(per_doc, ddl), ddl)`` over a frame with
-    ``url`` and ``html`` columns (plus ``warc_ts`` when ``ddl`` has it).
+def _values(col) -> list:
+    """A column's Python values; a null in a binary column becomes b""."""
+    if col.null_count and col.type == pa.binary():
+        col = col.fill_null(b"")
+    return col.to_pylist()
 
-    ``per_doc(html)`` gets each page's bytes (``None`` becomes ``b""``)
-    and returns a list of output tuples, one value per ``ddl`` column
-    other than the pass-through ``url``/``warc_ts``: one tuple per page,
-    or zero or more for multi-row sites.  The operator owns the rest:
 
-    - error rows: if ``per_doc`` raises, the constant ``fallback`` rows
-      are emitted for that page and the task goes on;
+def _var_bytes(values) -> int:
+    return sum(len(v) for v in values if isinstance(v, (bytes, str)))
+
+
+def doc_batches(per_doc, ddl: str, *, inputs=("html",), fallback=None,
+                latest_only=False):
+    """The one per-row Arrow operator: build the function handed to
+    ``frame.mapInArrow(doc_batches(per_doc, ddl), ddl)``.
+
+    ``per_doc(*values)`` gets each row's values of the ``inputs`` columns,
+    in that order: a null in a binary column arrives as ``b""``, any
+    other null as ``None``.  It returns a list of output tuples, one value
+    per ``ddl`` column that is not also a column of the input frame: one
+    tuple per row, or zero or more for multi-row sites.  The operator owns
+    the rest:
+
+    - pass-through: a ``ddl`` column that is also an input column is
+      ``take``-n from the input (keeping the input's Arrow type),
+      repeated once per output row;
+    - error rows: a raising ``per_doc`` fails the task, unless
+      ``fallback`` is given: then its constant rows (none for ``()``)
+      are emitted for that input row and the task goes on;
     - ``latest_only``: the input is sorted by (url, warc_ts desc) within
       the partition and only the first row of each url run (the latest
       capture) is kept, tracked across input-batch boundaries;
-    - pass-through: ``url`` (and ``warc_ts``) are ``take``-n from the
-      input columns, repeated once per output row;
     - re-batching: an output batch is cut at the end of each input batch
-      and whenever its input plus variable-width output bytes reach
-      ``_TARGET_OUT_BATCH_BYTES``, so one 50 MB page amid 4 KB pages
-      cannot blow up a single Arrow batch."""
-    fields = []
-    for col in ddl.split(","):
-        name, typ = col.split()
-        fields.append((name, None if name in _PASS_THROUGH
-                       else _ARROW_TYPES[typ]))
-    fallback = list(fallback)
+      and whenever its input plus output bytes (binary and string values)
+      reach ``_TARGET_OUT_BATCH_BYTES``, so one 50 MB page amid 4 KB
+      pages cannot blow up a single Arrow batch.
+
+    Every ``ddl`` type is looked up in ``_ARROW_TYPES`` here, so an
+    unsupported one fails when the operator is built, not in a task."""
+    fields = [(name, _ARROW_TYPES[typ])
+              for name, typ in (col.split() for col in ddl.split(","))]
 
     def out_batch(batch, idx, rows):
         idx = pa.array(idx, pa.int32())
         made = iter(zip(*rows))
+        passed = set(batch.schema.names)
         return pa.RecordBatch.from_arrays(
-            [batch.column(name).take(idx) if typ is None
+            [batch.column(name).take(idx) if name in passed
              else pa.array(next(made), typ) for name, typ in fields],
             names=[name for name, _ in fields],
         )
@@ -95,23 +119,24 @@ def doc_batches(per_doc, ddl: str, *, fallback=(), latest_only=False):
         last_url = None
         for batch in iterator:
             urls = batch.column("url").to_pylist() if latest_only else None
+            values = zip(*(_values(batch.column(c)) for c in inputs))
             idx, rows, acc_bytes = [], [], 0
-            for i, h in enumerate(batch.column("html").to_pylist()):
+            for i, vals in enumerate(values):
                 if latest_only:
                     if urls[i] == last_url:
                         continue  # older capture of the same url
                     last_url = urls[i]
-                h = h or b""
                 try:
-                    out = per_doc(h)
+                    out = per_doc(*vals)
                 except Exception:  # noqa: BLE001 — error-row policy
+                    if fallback is None:
+                        raise
                     out = fallback
-                acc_bytes += len(h)
+                acc_bytes += _var_bytes(vals)
                 for row in out:
                     idx.append(i)
                     rows.append(row)
-                    acc_bytes += sum(len(v) for v in row
-                                     if isinstance(v, (bytes, str)))
+                    acc_bytes += _var_bytes(row)
                 if acc_bytes >= _TARGET_OUT_BATCH_BYTES and rows:
                     yield out_batch(batch, idx, rows)
                     idx, rows, acc_bytes = [], [], 0

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .extract_job import doc_batches
+
 MEDIA_SCHEMA_DDL = "doc_id bigint, media binary, mime string"
 FEATURE_SCHEMA_DDL = (
     "doc_id bigint, media_len int, decoder string,"
@@ -44,113 +46,88 @@ def synth_media(spark, sf_dir: str) -> DataFrame:
     modality: 0 -> real PNG, 1 -> real PCM WAV, 2 -> real baseline
     JPEG (grayscale, DCT+Huffman), 3 -> real uncompressed AVI video,
     4 -> opaque bytes (fake path)."""
+    import hashlib
+
+    import numpy as np
+
     from . import io as tableio
+    from .avicodec import encode_avi
+    from .jpegcodec import encode_jpeg
+    from .pngcodec import encode_png
+    from .wavcodec import encode_wav
 
     source = f"{sf_dir}/documents.parquet"
     docs = tableio.spread_small_scan(
         spark, tableio.read_table(spark, source), source
     ).select("doc_id")
 
-    def blobs(iterator):
-        import hashlib
+    def blob(i):
+        kind = i % 5
+        if kind == 0:
+            w = 4 + i % 13
+            h = 3 + i % 11
+            # Alternate grayscale and RGB truecolor (same value generator,
+            # 3x values for color — media_pixel_sums' oracle replays this
+            # arithmetic).  Filter type cycles via (i // 5) % 5: PNG rows
+            # all have i % 5 == 0, so the old `i % 5` was constant 0 and
+            # filters 1-4 never ran in production (filters are lossless,
+            # so decoded pixels — and every oracle — are unchanged by
+            # this).
+            nch = 3 if (i // 5) % 2 else 1
+            px = ((i * 31 + np.arange(h * w * nch, dtype=np.int64))
+                  % 256).reshape(h, w * nch)
+            return [(encode_png(px, channels=nch, filter_type=(i // 5) % 5),
+                     "image/png")]
+        if kind == 1:
+            # Alternate mono and interleaved stereo (same value generator
+            # over 2x values for stereo — media_meta's n_samples and
+            # media_pixel_sums replay it).
+            nch = 2 if (i // 5) % 2 else 1
+            n = (256 + i % 500) * nch
+            samples = (((np.arange(n, dtype=np.int64)
+                         * (i % 7 + 1) * 997) % 4096) - 2048) \
+                .astype(np.int16)
+            return [(encode_wav(samples, sample_rate=8000 + (i % 3) * 4000,
+                                channels=nch), "audio/wav")]
+        if kind == 2:
+            w = 16 + i % 31
+            h = 9 + i % 17
+            # Deterministic gradient+texture image; REAL JPEG encoded
+            # (DCT + Huffman).  Alternate grayscale and 4:2:0 YCbCr color,
+            # and sequential (SOF0) vs progressive (SOF2) streams, so all
+            # four decode paths run in production.  Progressive re-encodes
+            # the same quantized coefficients, so decoded pixels (and
+            # every media oracle) are unchanged.
+            base = (i * 17 + np.arange(h * w, dtype=np.int64) * 3) % 256
+            prog = (i // 10) % 2 == 1
+            if (i // 5) % 2:
+                px = base.astype(np.uint8).reshape(h, w)
+                return [(encode_jpeg(px, quality=92, progressive=prog),
+                         "image/jpeg")]
+            px = np.stack([(base + 85 * c) % 256 for c in range(3)],
+                          axis=1).astype(np.uint8).reshape(h, w, 3)
+            return [(encode_jpeg(px, quality=92, subsampling="420",
+                                 progressive=prog), "image/jpeg")]
+        if kind == 3:
+            nf = 2 + i % 3
+            w = 8 + i % 9
+            h = 6 + i % 7
+            # Alternate 8-bit gray and 24-bit BI_RGB color so both decode
+            # paths run in production; same value generator, 3x the
+            # values for color (the media_pixel_sums oracle replays this
+            # arithmetic).
+            nch = 3 if (i // 5) % 2 else 1
+            vals = ((i * 13 + np.arange(nf * h * w * nch, dtype=np.int64)
+                     * 7) % 256).astype(np.uint8)
+            fr = (vals.reshape(nf, h, w, 3) if nch == 3
+                  else vals.reshape(nf, h, w))
+            return [(encode_avi(fr, fps=8 + i % 7), "video/avi")]
+        seed = hashlib.md5(str(i).encode()).digest()
+        return [(seed * 64, "application/octet-stream")]
 
-        import numpy as np
-        import pyarrow as pa
-
-        from .avicodec import encode_avi
-        from .jpegcodec import encode_jpeg
-        from .pngcodec import encode_png
-        from .wavcodec import encode_wav
-
-        for batch in iterator:
-            ids = batch.column("doc_id").to_pylist()
-            media, mime = [], []
-            for i in ids:
-                kind = i % 5
-                if kind == 0:
-                    w = 4 + i % 13
-                    h = 3 + i % 11
-                    # Alternate grayscale and RGB truecolor (same value
-                    # generator, 3x values for color — media_pixel_sums'
-                    # oracle replays this arithmetic).  Filter type
-                    # cycles via (i // 5) % 5: PNG rows all have
-                    # i % 5 == 0, so the old `i % 5` was constant 0 and
-                    # filters 1-4 never ran in production (filters are
-                    # lossless, so decoded pixels — and every oracle —
-                    # are unchanged by this).
-                    nch = 3 if (i // 5) % 2 else 1
-                    px = ((i * 31 + np.arange(h * w * nch,
-                                              dtype=np.int64))
-                          % 256).reshape(h, w * nch)
-                    media.append(encode_png(px, channels=nch,
-                                            filter_type=(i // 5) % 5))
-                    mime.append("image/png")
-                elif kind == 1:
-                    # Alternate mono and interleaved stereo (same value
-                    # generator over 2x values for stereo — media_meta's
-                    # n_samples and media_pixel_sums replay it).
-                    nch = 2 if (i // 5) % 2 else 1
-                    n = (256 + i % 500) * nch
-                    samples = (((np.arange(n, dtype=np.int64)
-                                 * (i % 7 + 1) * 997) % 4096) - 2048) \
-                        .astype(np.int16)
-                    media.append(encode_wav(
-                        samples, sample_rate=8000 + (i % 3) * 4000,
-                        channels=nch))
-                    mime.append("audio/wav")
-                elif kind == 2:
-                    w = 16 + i % 31
-                    h = 9 + i % 17
-                    # Deterministic gradient+texture image; REAL
-                    # JPEG encoded (DCT + Huffman).  Alternate grayscale
-                    # and 4:2:0 YCbCr color, and sequential (SOF0) vs
-                    # progressive (SOF2) streams, so all four decode
-                    # paths run in production.  Progressive re-encodes
-                    # the same quantized coefficients, so decoded pixels
-                    # (and every media oracle) are unchanged.
-                    base = (i * 17 + np.arange(h * w, dtype=np.int64)
-                            * 3) % 256
-                    prog = (i // 10) % 2 == 1
-                    if (i // 5) % 2:
-                        px = base.astype(np.uint8).reshape(h, w)
-                        media.append(encode_jpeg(px, quality=92,
-                                                 progressive=prog))
-                    else:
-                        px = np.stack(
-                            [(base + 85 * c) % 256 for c in range(3)],
-                            axis=1).astype(np.uint8).reshape(h, w, 3)
-                        media.append(encode_jpeg(px, quality=92,
-                                                 subsampling="420",
-                                                 progressive=prog))
-                    mime.append("image/jpeg")
-                elif kind == 3:
-                    nf = 2 + i % 3
-                    w = 8 + i % 9
-                    h = 6 + i % 7
-                    # Alternate 8-bit gray and 24-bit BI_RGB color so
-                    # both decode paths run in production; same value
-                    # generator, 3x the values for color (the
-                    # media_pixel_sums oracle replays this arithmetic).
-                    nch = 3 if (i // 5) % 2 else 1
-                    vals = ((i * 13 + np.arange(nf * h * w * nch,
-                                                dtype=np.int64) * 7)
-                            % 256).astype(np.uint8)
-                    fr = (vals.reshape(nf, h, w, 3) if nch == 3
-                          else vals.reshape(nf, h, w))
-                    media.append(encode_avi(fr, fps=8 + i % 7))
-                    mime.append("video/avi")
-                else:
-                    seed = hashlib.md5(str(i).encode()).digest()
-                    media.append(seed * 64)
-                    mime.append("application/octet-stream")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()),
-                 pa.array(media, pa.binary()),
-                 pa.array(mime, pa.string())],
-                names=["doc_id", "media", "mime"],
-            )
-
-    return docs.mapInArrow(blobs, MEDIA_SCHEMA_DDL)
+    return docs.mapInArrow(
+        doc_batches(blob, MEDIA_SCHEMA_DDL, inputs=("doc_id",)),
+        MEDIA_SCHEMA_DDL)
 
 
 def decode_image(data: bytes) -> dict:
@@ -423,54 +400,31 @@ def media_pixel_sums_query(spark, sf_dir: str):
     of any decoder moves the sum and fails the hash.  JPEG is excluded
     by nature (lossy DCT — its pixel-exactness is pinned by the
     sequential-vs-progressive identity tests instead)."""
-    from pyspark.sql import functions as F
+    import numpy as np
+
+    from .avicodec import decode_avi
+    from .pngcodec import decode_png
+    from .wavcodec import decode_wav
 
     media = synth_media(spark, sf_dir).filter(
         F.col("doc_id") % 5 != 2).filter(F.col("doc_id") % 5 != 4)
 
-    def sums(iterator):
-        import numpy as np
-        import pyarrow as pa
+    def sums(i, blob):
+        kind = i % 5
+        if kind == 0:
+            modality, vals = "png", decode_png(blob)[3]
+        elif kind == 1:
+            modality, vals = "wav", decode_wav(blob)[2]
+        else:
+            modality, vals = "avi", decode_avi(blob)[3]
+        v = np.asarray(vals, dtype=np.int64).ravel()
+        return [(modality, int(v.size), int(v.sum()), int(v.min()),
+                 int(v.max()))]
 
-        from .avicodec import decode_avi
-        from .pngcodec import decode_png
-        from .wavcodec import decode_wav
-
-        for batch in iterator:
-            ids = batch.column("doc_id").to_pylist()
-            blobs = batch.column("media").to_pylist()
-            modality, n_values, vsum, vmin, vmax = [], [], [], [], []
-            for i, blob in zip(ids, blobs):
-                kind = i % 5
-                if kind == 0:
-                    vals = decode_png(blob)[3]
-                    modality.append("png")
-                elif kind == 1:
-                    vals = decode_wav(blob)[2]
-                    modality.append("wav")
-                else:
-                    vals = decode_avi(blob)[3]
-                    modality.append("avi")
-                v = np.asarray(vals, dtype=np.int64).ravel()
-                n_values.append(int(v.size))
-                vsum.append(int(v.sum()))
-                vmin.append(int(v.min()))
-                vmax.append(int(v.max()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()),
-                 pa.array(modality, pa.string()),
-                 pa.array(n_values, pa.int64()),
-                 pa.array(vsum, pa.int64()),
-                 pa.array(vmin, pa.int64()),
-                 pa.array(vmax, pa.int64())],
-                names=["doc_id", "modality", "n_values", "val_sum",
-                       "val_min", "val_max"],
-            )
-
+    ddl = ("doc_id bigint, modality string, n_values bigint,"
+           " val_sum bigint, val_min bigint, val_max bigint")
     return media.mapInArrow(
-        sums,
-        "doc_id bigint, modality string, n_values bigint,"
-        " val_sum bigint, val_min bigint, val_max bigint",
+        doc_batches(sums, ddl, inputs=("doc_id", "media")), ddl,
     ).orderBy("doc_id")
 
 
@@ -665,43 +619,26 @@ def media_frame_sample_query(spark, sf_dir: str):
     [f*h*w*nch, (f+1)*h*w*nch) of (id*13 + 7k) % 256 — without touching
     a media byte, so one wrong pixel in any sampled frame fails the
     hash."""
-    from pyspark.sql import functions as F
+    import numpy as np
+
+    from .avicodec import decode_avi
 
     media = synth_media(spark, sf_dir).filter(F.col("doc_id") % 5 == 3)
 
-    def sample(iterator):
-        import numpy as np
-        import pyarrow as pa
+    def sample(blob):
+        frames = decode_avi(blob)[3]
+        nf = frames.shape[0]
+        out = []
+        for f in sorted({0, nf // 2, nf - 1}):
+            v = np.asarray(frames[f], dtype=np.int64).ravel()
+            out.append((f, int(v.size), int(v.sum()), int(v.min()),
+                        int(v.max())))
+        return out
 
-        from .avicodec import decode_avi
-
-        for batch in iterator:
-            ids = batch.column("doc_id").to_pylist()
-            blobs = batch.column("media").to_pylist()
-            did, fno, nv, vs, vmn, vmx = [], [], [], [], [], []
-            for i, blob in zip(ids, blobs):
-                frames = decode_avi(blob)[3]
-                nf = frames.shape[0]
-                for f in sorted({0, nf // 2, nf - 1}):
-                    v = np.asarray(frames[f], dtype=np.int64).ravel()
-                    did.append(i)
-                    fno.append(f)
-                    nv.append(int(v.size))
-                    vs.append(int(v.sum()))
-                    vmn.append(int(v.min()))
-                    vmx.append(int(v.max()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(did, pa.int64()), pa.array(fno, pa.int32()),
-                 pa.array(nv, pa.int64()), pa.array(vs, pa.int64()),
-                 pa.array(vmn, pa.int64()), pa.array(vmx, pa.int64())],
-                names=["doc_id", "frame_no", "n_values", "val_sum",
-                       "val_min", "val_max"],
-            )
-
+    ddl = ("doc_id bigint, frame_no int, n_values bigint, val_sum bigint,"
+           " val_min bigint, val_max bigint")
     return media.mapInArrow(
-        sample,
-        "doc_id bigint, frame_no int, n_values bigint, val_sum bigint,"
-        " val_min bigint, val_max bigint",
+        doc_batches(sample, ddl, inputs=("media",)), ddl,
     ).orderBy("doc_id", "frame_no")
 
 
@@ -743,46 +680,28 @@ def media_audio_rms_query(spark, sf_dir: str):
     integer-rooted so the oracle hash-matches.  DuckDB replays the
     windows from the synth arithmetic s_k = ((k*(id%7+1)*997) % 4096)
     - 2048 without touching a media byte."""
-    from pyspark.sql import functions as F
+    import math
+
+    import numpy as np
+
+    from .wavcodec import decode_wav
 
     media = synth_media(spark, sf_dir).filter(F.col("doc_id") % 5 == 1)
 
-    def windows(iterator):
-        import math
+    def windows(blob):
+        samples = np.asarray(decode_wav(blob)[2], dtype=np.int64).ravel()
+        out = []
+        for w in range(0, len(samples), 256):
+            v = samples[w:w + 256]
+            s = int((v * v).sum())
+            out.append((w // 256, int(v.size), s, int(np.abs(v).max()),
+                        int(math.isqrt(s // int(v.size)))))
+        return out
 
-        import numpy as np
-        import pyarrow as pa
-
-        from .wavcodec import decode_wav
-
-        for batch in iterator:
-            ids = batch.column("doc_id").to_pylist()
-            blobs = batch.column("media").to_pylist()
-            did, wno, nv, ssq, pk, rms = [], [], [], [], [], []
-            for i, blob in zip(ids, blobs):
-                samples = np.asarray(decode_wav(blob)[2],
-                                     dtype=np.int64).ravel()
-                for w in range(0, len(samples), 256):
-                    v = samples[w:w + 256]
-                    s = int((v * v).sum())
-                    did.append(i)
-                    wno.append(w // 256)
-                    nv.append(int(v.size))
-                    ssq.append(s)
-                    pk.append(int(np.abs(v).max()))
-                    rms.append(int(math.isqrt(s // int(v.size))))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(did, pa.int64()), pa.array(wno, pa.int32()),
-                 pa.array(nv, pa.int64()), pa.array(ssq, pa.int64()),
-                 pa.array(pk, pa.int64()), pa.array(rms, pa.int64())],
-                names=["doc_id", "win_no", "n_samples", "sum_sq",
-                       "peak", "rms"],
-            )
-
+    ddl = ("doc_id bigint, win_no int, n_samples bigint, sum_sq bigint,"
+           " peak bigint, rms bigint")
     return media.mapInArrow(
-        windows,
-        "doc_id bigint, win_no int, n_samples bigint, sum_sq bigint,"
-        " peak bigint, rms bigint",
+        doc_batches(windows, ddl, inputs=("media",)), ddl,
     ).orderBy("doc_id", "win_no")
 
 

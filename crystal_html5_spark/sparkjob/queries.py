@@ -41,13 +41,6 @@ TABLES = (
 )
 
 
-def _spread_view(spark, df: DataFrame, source: str) -> DataFrame:
-    """Scale-adaptive scan spreading — see io.spread_small_scan (the
-    single implementation; memoized split-count probe, no exchange at
-    real scale)."""
-    return tableio.spread_small_scan(spark, df, source)
-
-
 # Tables whose queries do heavy per-row expression work map-side (the
 # minhash/ngram/simhash/unigram families over `documents`): these get
 # the adaptive spread.  The relational facts (lineitem/orders)
@@ -76,7 +69,7 @@ def _read_view(spark, t: str, source: str) -> DataFrame:
     if df is None:
         df = tableio.read_table(spark, source)
         if t in _SPREAD_TABLES:
-            df = _spread_view(spark, df, source)
+            df = tableio.spread_small_scan(spark, df, source)
         _VIEW_MEMO[key] = df
     return df
 
@@ -1745,7 +1738,7 @@ def _extract_anchor_frame(spark) -> DataFrame:
 
     ddl = "url string, href string, anchor_text string"
     return _pages_fixed_spread(spark).select("url", "html").mapInArrow(
-        doc_batches(anchors, ddl), ddl)
+        doc_batches(anchors, ddl, fallback=()), ddl)
 
 
 def _extract_anchor_texts(spark, sf_dir: str) -> DataFrame:
@@ -2195,52 +2188,33 @@ def _sitemap_extract(spark, sf_dir: str) -> DataFrame:
         "SELECT DISTINCT CAST(doc_id % 97 AS INT) AS host_id"
         " FROM documents")
 
-    def parse_maps(iterator):
-        import pyarrow as pa
+    from ..html5x.css import compile_selector
+    from ..html5x.parser import parse
 
-        from crystal_html5_spark.html5x.css import compile_selector
-        from crystal_html5_spark.html5x.parser import parse
-        from crystal_html5_spark.sparkjob.queries import (
-            _sitemap_xml_for_host,
-        )
+    sel_url = compile_selector("url")
+    sel_loc = compile_selector("loc")
+    sel_mod = compile_selector("lastmod")
+    sel_pri = compile_selector("priority")
 
-        sel_url = compile_selector("url")
-        sel_loc = compile_selector("loc")
-        sel_mod = compile_selector("lastmod")
-        sel_pri = compile_selector("priority")
-        for batch in iterator:
-            hs = batch.column("host_id").to_pylist()
-            hid, n_urls, first_loc, sum_pri, max_day = [], [], [], [], []
-            for h in hs:
-                doc = parse(_sitemap_xml_for_host(h).encode())
-                locs, pris, days = [], [], []
-                for u in sel_url.select(doc):
-                    lnode = sel_loc.select(u)
-                    mnode = sel_mod.select(u)
-                    pnode = sel_pri.select(u)
-                    if not (lnode and mnode and pnode):
-                        continue
-                    locs.append(lnode[0].inner_text())
-                    pris.append(int(pnode[0].inner_text().split(".")[1]))
-                    days.append(int(mnode[0].inner_text().split("-")[2]))
-                hid.append(h)
-                n_urls.append(len(locs))
-                first_loc.append(min(locs) if locs else None)
-                sum_pri.append(sum(pris))
-                max_day.append(max(days) if days else 0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(hid, pa.int32()), pa.array(n_urls, pa.int64()),
-                 pa.array(first_loc, pa.string()),
-                 pa.array(sum_pri, pa.int64()),
-                 pa.array(max_day, pa.int64())],
-                names=["host_id", "n_urls", "first_loc",
-                       "sum_prio_decis", "max_lastmod_day"],
-            )
+    def parse_map(h):
+        doc = parse(_sitemap_xml_for_host(h).encode())
+        locs, pris, days = [], [], []
+        for u in sel_url.select(doc):
+            lnode = sel_loc.select(u)
+            mnode = sel_mod.select(u)
+            pnode = sel_pri.select(u)
+            if not (lnode and mnode and pnode):
+                continue
+            locs.append(lnode[0].inner_text())
+            pris.append(int(pnode[0].inner_text().split(".")[1]))
+            days.append(int(mnode[0].inner_text().split("-")[2]))
+        return [(len(locs), min(locs) if locs else None, sum(pris),
+                 max(days) if days else 0)]
 
+    ddl = ("host_id int, n_urls long, first_loc string,"
+           " sum_prio_decis long, max_lastmod_day long")
     return hosts.mapInArrow(
-        parse_maps,
-        "host_id int, n_urls long, first_loc string,"
-        " sum_prio_decis long, max_lastmod_day long",
+        doc_batches(parse_map, ddl, inputs=("host_id",)), ddl,
     ).orderBy("host_id")
 
 
@@ -2288,54 +2262,33 @@ def _url_robots_gate(spark, sf_dir: str) -> DataFrame:
     raw = spark.sql(
         f"SELECT doc_id, {_URL_RAW_CASE} AS url_raw FROM documents")
 
-    def verdicts(iterator):
-        import re as _re
+    import re as _re
 
-        import pyarrow as pa
+    from .robots import allowed, parse_robots, rules_for
+    from .warcio import split_http_url
 
-        from crystal_html5_spark.sparkjob.queries import _ROBOTS_TEMPLATES
-        from crystal_html5_spark.sparkjob.robots import (
-            allowed,
-            parse_robots,
-            rules_for,
-        )
-        from crystal_html5_spark.sparkjob.warcio import split_http_url
+    host_rx = _re.compile(r"host(\d+)\.example$")
+    # the 5 fixed templates are parsed once, not once per url
+    rules = [rules_for(parse_robots(t), "sparkbot")
+             for t in _ROBOTS_TEMPLATES]
 
-        host_rx = _re.compile(r"host(\d+)\.example$")
-        # parse the 5 fixed templates ONCE per task, not once per url
-        # (review finding: per-row parse_robots was pure hot-path waste)
-        rules = [rules_for(parse_robots(t), "sparkbot")
-                 for t in _ROBOTS_TEMPLATES]
+    def judge(url):
+        parts = split_http_url(url)
+        if parts is None:
+            return [(-1, -1, 0)]
+        host, pathq = parts
+        if not pathq:
+            pathq = "/"
+        m = host_rx.match(host)
+        if not m:
+            return [(-1, -1, 0)]
+        hid = int(m.group(1))
+        tid = hid % len(_ROBOTS_TEMPLATES)
+        return [(hid, tid, 1 if allowed(rules[tid], pathq) else 0)]
 
-        def judge(url):
-            parts = split_http_url(url)
-            if parts is None:
-                return (-1, -1, 0)
-            host, pathq = parts
-            if not pathq:
-                pathq = "/"
-            m = host_rx.match(host)
-            if not m:
-                return (-1, -1, 0)
-            hid = int(m.group(1))
-            tid = hid % len(_ROBOTS_TEMPLATES)
-            return (hid, tid, 1 if allowed(rules[tid], pathq) else 0)
-
-        for batch in iterator:
-            ids = batch.column("doc_id").to_pylist()
-            urls = batch.column("url_raw").to_pylist()
-            rows = [judge(u) for u in urls]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()),
-                 pa.array([r[0] for r in rows], pa.int32()),
-                 pa.array([r[1] for r in rows], pa.int32()),
-                 pa.array([r[2] for r in rows], pa.int32())],
-                names=["doc_id", "host_id", "template", "allowed"],
-            )
-
+    ddl = "doc_id long, host_id int, template int, allowed int"
     return raw.mapInArrow(
-        verdicts,
-        "doc_id long, host_id int, template int, allowed int",
+        doc_batches(judge, ddl, inputs=("url_raw",)), ddl,
     ).orderBy("doc_id")
 
 
@@ -2776,7 +2729,7 @@ def _extract_content_blocks(spark, sf_dir: str) -> DataFrame:
     ddl = ("url string, block_no int, tag string,"
            " text_len long, link_len long")
     bdf = _latest_pages_sorted(spark).mapInArrow(
-        doc_batches(feats, ddl, latest_only=True), ddl)
+        doc_batches(feats, ddl, fallback=(), latest_only=True), ddl)
     bdf.createOrReplaceTempView("extract_block_feats")
     return spark.sql(_CONTENT_BLOCKS_CLASSIFY.format(
         src="SELECT * FROM extract_block_feats"))
@@ -3636,8 +3589,8 @@ def _pages_fixed_spread(spark) -> DataFrame:
     page_xpath_stats, WARC/WAT serialization) parses every page in ONE
     Python worker.  Queries that feed run_extract don't need this — the
     pipeline's salted repartition already spreads them."""
-    return _spread_view(spark, _pages_fixed(spark),
-                        f"pages_fixed_{_FIXED_PAGES_N}")
+    return tableio.spread_small_scan(spark, _pages_fixed(spark),
+                                     f"pages_fixed_{_FIXED_PAGES_N}")
 
 
 def _latest_pages_sorted(spark) -> DataFrame:
@@ -3682,6 +3635,8 @@ def _warc_extract_pages_impl(spark, gz: bool) -> DataFrame:
     oracle as extract_pages, so a single byte lost or altered by the
     WARC round-trip (url, capture timestamp feeding latest-capture
     dedup, html payload, gzip member framing) fails the hash."""
+    from .warcio import PAGES_DDL, _record_batches, parse_warc
+
     pages = _pages_fixed_spread(spark).select("url", "warc_ts", "html")
 
     def to_warc(iterator):
@@ -3700,28 +3655,9 @@ def _warc_extract_pages_impl(spark, gz: bool) -> DataFrame:
                 names=["content"],
             )
 
-    def from_warc(iterator):
-        import pyarrow as pa
-
-        from crystal_html5_spark.sparkjob.warcio import parse_warc
-
-        for batch in iterator:
-            urls, tss, htmls = [], [], []
-            for blob in batch.column("content"):
-                for url, ts, html in parse_warc(blob.as_py()):
-                    urls.append(url)
-                    tss.append(ts)
-                    htmls.append(html)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()),
-                 pa.array(tss, pa.timestamp("us")),
-                 pa.array(htmls, pa.binary())],
-                names=["url", "warc_ts", "html"],
-            )
-
     warc = pages.mapInArrow(to_warc, "content binary")
     restored = warc.mapInArrow(
-        from_warc, "url string, warc_ts timestamp, html binary")
+        _record_batches(parse_warc, "html", "fail"), PAGES_DDL)
     out = run_extract(spark, restored)
     return out.select(
         "url",
@@ -3747,17 +3683,16 @@ def _wat_extract_meta(spark, sf_dir: str) -> DataFrame:
     field altered by the WAT round-trip fails the hash.  Aggregation
     (not a row-per-page join) because the fixture intentionally holds
     recrawled duplicate urls."""
+    from .warcio import parse_wat
+
     pages = _pages_fixed_spread(spark).select("url", "warc_ts", "html")
 
     def to_wat(iterator):
         import pyarrow as pa
 
-        from crystal_html5_spark.html5x.css import compile_selector
         from crystal_html5_spark.html5x.parser import parse
-        from crystal_html5_spark.html5x.xpath import xpath
         from crystal_html5_spark.sparkjob.warcio import write_wat
 
-        sel = compile_selector("a[href]")
         for batch in iterator:
             urls = batch.column("url").to_pylist()
             tss = batch.column("warc_ts").to_pylist()
@@ -3766,11 +3701,7 @@ def _wat_extract_meta(spark, sf_dir: str) -> DataFrame:
             for u, ts, h in zip(urls, tss, htmls):
                 try:
                     doc = parse(h or b"")
-                    node = xpath(doc, "//title")
-                    t = node.inner_text() if node is not None else None
-                    if t is not None:
-                        t = t.encode("utf-8", "replace").decode("utf-8")
-                    hrefs = [m["href"] for m in sel.select(doc)]
+                    t, hrefs = _doc_title(doc), _doc_hrefs(doc)
                 except Exception:  # noqa: BLE001 — malformed page
                     t, hrefs = None, []
                 meta: dict = {"Links": [{"path": "A@/href", "url": x}
@@ -3783,32 +3714,18 @@ def _wat_extract_meta(spark, sf_dir: str) -> DataFrame:
                 names=["content"],
             )
 
-    def from_wat(iterator):
-        import pyarrow as pa
+    def from_wat(blob):
+        out = []
+        for url, _ts, meta in parse_wat(blob):
+            links = meta.get("Links", [])
+            out.append((url, meta.get("Head", {}).get("Title"), len(links),
+                        links[0]["url"] if links else None))
+        return out
 
-        from crystal_html5_spark.sparkjob.warcio import parse_wat
-
-        for batch in iterator:
-            urls, titles, n_links, first_href = [], [], [], []
-            for blob in batch.column("content"):
-                for url, _ts, meta in parse_wat(blob.as_py()):
-                    links = meta.get("Links", [])
-                    urls.append(url)
-                    titles.append(meta.get("Head", {}).get("Title"))
-                    n_links.append(len(links))
-                    first_href.append(links[0]["url"] if links else None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()),
-                 pa.array(titles, pa.string()),
-                 pa.array(n_links, pa.int64()),
-                 pa.array(first_href, pa.string())],
-                names=["url", "title", "n_links", "first_href"],
-            )
-
+    ddl = "url string, title string, n_links bigint, first_href string"
     wat = pages.mapInArrow(to_wat, "content binary")
     restored = wat.mapInArrow(
-        from_wat,
-        "url string, title string, n_links bigint, first_href string")
+        doc_batches(from_wat, ddl, inputs=("content",)), ddl)
     return (
         restored.groupBy("url")
         .agg(
@@ -3825,16 +3742,33 @@ def _warc_gz_extract_pages(spark, sf_dir: str) -> DataFrame:
     return _warc_extract_pages_impl(spark, gz=True)
 
 
+def _doc_hrefs(doc) -> list:
+    """The href of every a[href] of a parsed page, in document order
+    (page_links and the WAT leg)."""
+    from ..html5x.css import compile_selector
+
+    return [m["href"] for m in compile_selector("a[href]").select(doc)]
+
+
+def _doc_title(doc):
+    """The //title text of a parsed page, with any lone surrogate
+    replaced so it encodes as UTF-8; None without a title (page_titles
+    and the WAT leg)."""
+    from ..html5x.xpath import xpath
+
+    node = xpath(doc, "//title")
+    if node is None:
+        return None
+    return node.inner_text().encode("utf-8", "replace").decode("utf-8")
+
+
 def _page_links(spark, sf_dir: str) -> DataFrame:
     """CSS-driven link extraction per page (a[href]); oracle-checked
     against the frozen in-process-engine output."""
-    from ..html5x.css import compile_selector
     from ..html5x.parser import parse
 
-    sel = compile_selector("a[href]")
-
     def links(html):
-        hrefs = [m["href"] for m in sel.select(parse(html))]
+        hrefs = _doc_hrefs(parse(html))
         return [(len(hrefs), hrefs[0] if hrefs else None)]
 
     ddl = "url string, n_links int, first_href string"
@@ -3847,14 +3781,9 @@ def _page_titles(spark, sf_dir: str) -> DataFrame:
     """XPath-driven title extraction per page (//title); oracle-checked
     against the frozen in-process-engine output."""
     from ..html5x.parser import parse
-    from ..html5x.xpath import xpath
 
     def titles(html):
-        node = xpath(parse(html), "//title")
-        if node is None:
-            return [(None,)]
-        return [(node.inner_text().encode("utf-8", "replace")
-                 .decode("utf-8"),)]
+        return [(_doc_title(parse(html)),)]
 
     ddl = "url string, title string"
     return _pages_fixed_spread(spark).select("url", "html").mapInArrow(
@@ -4004,45 +3933,29 @@ def _pdf_text_roundtrip(spark, sf_dir: str) -> DataFrame:
     page count and text md5 straight from the documents table and never
     sees a PDF byte — a writer/parser bug on the Spark side cannot
     cancel out."""
+    import hashlib
+
+    from .pdfcodec import PdfError, encode_simple_pdf, extract_pdf_text
+
     source = f"{sf_dir}/documents.parquet"
-    docs = _spread_view(
+    docs = tableio.spread_small_scan(
         spark, tableio.read_table(spark, source), source
     ).select("doc_id", "text")
+    k = _PDF_PAGE_CHARS
 
-    def roundtrip(iterator):
-        import hashlib
+    def roundtrip(t):
+        t = t or ""
+        chunks = [t[i:i + k] for i in range(0, max(len(t), 1), k)]
+        try:
+            out = extract_pdf_text(encode_simple_pdf(chunks))
+        except PdfError:  # pragma: no cover — writer is valid
+            return [(-1, "")]
+        return [(len(out),
+                 hashlib.md5("".join(out).encode("utf-8")).hexdigest())]
 
-        import pyarrow as pa
-
-        from .pdfcodec import PdfError, encode_simple_pdf, \
-            extract_pdf_text
-
-        k = _PDF_PAGE_CHARS
-        for batch in iterator:
-            ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            n_pages, md5s = [], []
-            for t in texts:
-                t = t or ""
-                chunks = [t[i:i + k]
-                          for i in range(0, max(len(t), 1), k)]
-                try:
-                    out = extract_pdf_text(encode_simple_pdf(chunks))
-                    n_pages.append(len(out))
-                    md5s.append(hashlib.md5(
-                        "".join(out).encode("utf-8")).hexdigest())
-                except PdfError:  # pragma: no cover — writer is valid
-                    n_pages.append(-1)
-                    md5s.append("")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()),
-                 pa.array(n_pages, pa.int64()),
-                 pa.array(md5s, pa.string())],
-                names=["doc_id", "n_pdf_pages", "text_md5"],
-            )
-
+    ddl = "doc_id bigint, n_pdf_pages bigint, text_md5 string"
     return docs.mapInArrow(
-        roundtrip, "doc_id bigint, n_pdf_pages bigint, text_md5 string"
+        doc_batches(roundtrip, ddl, inputs=("text",)), ddl
     ).orderBy("doc_id")
 
 

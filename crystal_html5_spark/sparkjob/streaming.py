@@ -16,7 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .extract_job import DEFAULT_MAX_DOC_BYTES, RESULT_SCHEMA_DDL, make_extract_fn
+from .extract_job import (
+    DEFAULT_MAX_DOC_BYTES,
+    RESULT_SCHEMA_DDL,
+    doc_batches,
+    make_extract_fn,
+)
 from .pages import PAGES_SCHEMA_DDL
 
 
@@ -311,26 +316,9 @@ def near_dup_stream(docs: DataFrame) -> DataFrame:
     trading the all-pairs guarantee for O(1) state per bucket."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def explode_bands(iterator):
-        import pyarrow as pa
-
-        for batch in iterator:
-            ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            d, b, k = [], [], []
-            for i, text in zip(ids, texts):
-                for band_no, key in _py_minhash_bands(text):
-                    d.append(i)
-                    b.append(band_no)
-                    k.append(key)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(d, pa.int64()), pa.array(b, pa.int32()),
-                 pa.array(k, pa.string())],
-                names=["doc_id", "band_no", "band_key"],
-            )
-
+    ddl = "doc_id long, band_no int, band_key string"
     banded = docs.mapInArrow(
-        explode_bands, "doc_id long, band_no int, band_key string")
+        doc_batches(_py_minhash_bands, ddl, inputs=("text",)), ddl)
 
     def fn(key, pdfs, state: "GroupState"):
         import pandas as pd

@@ -423,50 +423,39 @@ def _salvage_records(blob: bytes, stats: dict | None = None,
 
 def _record_batches(parse, payload_col: str, on_error: str):
     """mapInArrow body factory shared by every file-based record source
-    (batch WARC, streaming WARC, WET): file-content batches in,
-    (url, warc_ts, <payload_col>) batches out, with one shared salvage
-    policy.  ``on_error``: "salvage" recovers what each damaged segment
-    allows (member-level for gz) and logs drop counts to executor
-    stderr; "fail" propagates (fails the task — for validation runs
-    where corruption must be loud)."""
+    (batch WARC, streaming WARC, WET): one file-content blob per input
+    row in, (url, warc_ts, <payload_col>) rows out through
+    ``extract_job.doc_batches``, with one shared salvage policy.
+    ``on_error``: "salvage" recovers what each damaged segment allows
+    (member-level for gz) and logs drop counts to executor stderr;
+    "fail" propagates (fails the task — for validation runs where
+    corruption must be loud)."""
+    from .extract_job import doc_batches
+
     if on_error not in ("salvage", "fail"):
         raise ValueError(f"unknown on_error {on_error!r}")
 
-    def batches(iterator):
+    def records(raw):
+        if on_error == "fail":
+            return list(parse(raw))
         import sys
 
-        import pyarrow as pa
-
-        for batch in iterator:
-            urls, tss, payloads = [], [], []
-            for blob in batch.column("content"):
-                raw = blob.as_py()
-                if on_error == "fail":
-                    recs = parse(raw)
-                else:
-                    stats: dict = {}
-                    recs = _salvage_records(raw, stats, parse)
-                for url, ts, payload in recs:
-                    urls.append(url)
-                    tss.append(ts)
-                    payloads.append(payload)
-                if on_error != "fail" and stats.get("drops"):
-                    # Salvage must be VISIBLE, not silent data loss:
-                    # executor stderr carries the per-segment count.
-                    print(
-                        f"[warcio] salvage: dropped {stats['drops']}"
-                        f" damaged member(s)/span(s) in a"
-                        f" {len(raw)}-byte segment",
-                        file=sys.stderr,
-                    )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()),
-                 pa.array(tss, pa.timestamp("us")),
-                 pa.array(payloads, pa.binary())],
-                names=["url", "warc_ts", payload_col],
+        stats: dict = {}
+        recs = list(_salvage_records(raw, stats, parse))
+        if stats.get("drops"):
+            # Salvage must be VISIBLE, not silent data loss:
+            # executor stderr carries the per-segment count.
+            print(
+                f"[warcio] salvage: dropped {stats['drops']}"
+                f" damaged member(s)/span(s) in a"
+                f" {len(raw)}-byte segment",
+                file=sys.stderr,
             )
+        return recs
 
-    return batches
+    return doc_batches(
+        records, f"url string, warc_ts timestamp, {payload_col} binary",
+        inputs=("content",))
 
 
 def read_warc_pages(spark, warc_dir: str, on_error: str = "salvage"):

@@ -1,4 +1,4 @@
-"""The per-document Arrow operator (extract_job.doc_batches), driven with
+"""The per-row Arrow operator (extract_job.doc_batches), driven with
 plain pyarrow batches: no Spark session."""
 
 import datetime as dt
@@ -61,9 +61,33 @@ def test_raising_per_doc_emits_fallback_and_goes_on():
     assert [(r["url"], r["n"], r["tag"]) for r in _rows(_run(fn, [batch]))] \
         == [("a", 2, "ok"), ("b", -1, None), ("b", -2, "x"),
             ("c", 4, "fine")]
-    # Without fallback rows a failing page simply yields nothing.
-    assert [r["url"] for r in _rows(_run(doc_batches(per_doc, DDL),
-                                         [batch]))] == ["a", "c"]
+    # With an empty fallback a failing page simply yields nothing.
+    assert [r["url"] for r in _rows(_run(
+        doc_batches(per_doc, DDL, fallback=()), [batch]))] == ["a", "c"]
+
+
+def test_raising_per_doc_fails_without_fallback():
+    def per_doc(html):
+        if html == b"bad":
+            raise ValueError("malformed")
+        return _length(html)
+
+    batch = _batch([("a", 1, b"ok"), ("b", 2, b"bad")])
+    with pytest.raises(ValueError, match="malformed"):
+        _run(doc_batches(per_doc, DDL), [batch])
+
+
+def test_raising_per_doc_fails_on_a_later_input_batch():
+    def per_doc(html):
+        if html == b"bad":
+            raise KeyError("missing")
+        return _length(html)
+
+    fn = doc_batches(per_doc, DDL)(iter([
+        _batch([("a", 1, b"ok")]), _batch([("b", 2, b"bad")])]))
+    assert next(fn).to_pylist()[0]["tag"] == "ok"
+    with pytest.raises(KeyError):
+        next(fn)
 
 
 def test_byte_cap_splits_batches_row_for_row(monkeypatch):
@@ -104,6 +128,52 @@ def test_none_html_reaches_per_doc_as_empty_bytes():
     out = _run(doc_batches(per_doc, DDL), [batch])
     assert seen == [b"", b"ab"]
     assert [r["n"] for r in _rows(out)] == [0, 2]
+
+
+def test_other_inputs_pass_through_and_computed_columns():
+    """The file-reader shape: per-row values from a non-html column, a
+    DDL column that is also an input column (doc_id) passed through,
+    and url/warc_ts computed although the input has no such columns."""
+    when = dt.datetime(2024, 5, 6, 7, 8, 9)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([7, 9], pa.int64()), pa.array([b"p|q", b"r"]),
+         pa.array(["x", "y"])],
+        names=["doc_id", "content", "unused"],
+    )
+
+    def records(content):
+        return [(f"u:{part.decode()}", when)
+                for part in content.split(b"|")]
+
+    ddl = "doc_id long, url string, warc_ts timestamp"
+    out = list(doc_batches(records, ddl, inputs=("content",))(
+        iter([batch])))
+    assert out[0].schema == pa.schema([("doc_id", pa.int64()),
+                                       ("url", pa.string()),
+                                       ("warc_ts", pa.timestamp("us"))])
+    assert _rows(out) == [
+        {"doc_id": 7, "url": "u:p", "warc_ts": when},
+        {"doc_id": 7, "url": "u:q", "warc_ts": when},
+        {"doc_id": 9, "url": "u:r", "warc_ts": when}]
+
+
+def test_null_becomes_empty_bytes_only_in_binary_inputs():
+    seen = []
+
+    def per_row(blob, label, n):
+        seen.append((blob, label, n))
+        return [(len(blob),)]
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([None, b"ab"], pa.binary()),
+         pa.array([None, "s"], pa.string()),
+         pa.array([None, 3], pa.int64())],
+        names=["blob", "label", "n"],
+    )
+    out = list(doc_batches(per_row, "size int",
+                           inputs=("blob", "label", "n"))(iter([batch])))
+    assert seen == [(b"", None, None), (b"ab", "s", 3)]
+    assert _rows(out) == [{"size": 0}, {"size": 2}]
 
 
 def test_url_only_schema_and_int32():
